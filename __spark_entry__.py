@@ -161,7 +161,8 @@ def q_ocr_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.slice(tokens("text"), 1, 4), " "),
         "[^A-Za-z0-9 ]", ""))
     planted = F.trim(F.regexp_replace(raw, " +", " "))
-    planted = F.when(planted == "", F.lit("NA")).otherwise(planted)
+    # NULL text plants 'NA' too: the renderer needs a string
+    planted = F.coalesce(F.nullif(planted, F.lit("")), F.lit("NA"))
     docs = docs.select("doc_id", planted.alias("planted"))
 
     def build(batches):
@@ -9163,7 +9164,7 @@ def oracle_sql() -> dict[str, str]:
                 ' +', ' ', 'g')) AS s
             FROM tok),
           pl AS (SELECT doc_id,
-                        CASE WHEN s = '' THEN 'NA' ELSE s END AS planted
+                        coalesce(nullif(s, ''), 'NA') AS planted
                  FROM p)
           SELECT doc_id,
             CASE WHEN doc_id % 17 = 0 THEN NULL ELSE planted END AS text,

@@ -10,11 +10,11 @@ text, windowed joins against audio_segments extents, duration-weighted
 sampling).
 
 Same engine contract as the media parsers (operators/multimodal.py):
-Arrow-batched ``mapInPandas`` kernel, per-payload error ROWS (never
-exceptions), the payload column never shuffles.  Reference parity:
-the reference ingests opaque uploads and emits typed per-document
-rows (/root/reference/services/file_processor.py:49-62); this is the
-timed-text member of that family.
+the shared Arrow batch path (``extract.map_payloads``), per-payload
+error ROWS (never exceptions), the payload column never shuffles.
+Reference parity: the reference ingests opaque uploads and emits typed
+per-document rows (services/file_processor.py:49-62);
+this is the timed-text member of that family.
 """
 
 from __future__ import annotations
@@ -23,6 +23,8 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ocr_spark.operators.multimodal import _map_media
 
 __all__ = ["SRT_SCHEMA", "parse_srt", "srt_cues"]
 
@@ -97,24 +99,7 @@ def srt_cues(df: DataFrame, payload_col: str = "payload",
              id_col: str = "media_id") -> DataFrame:
     """One row per parsed cue; malformed payloads become ONE
     parse_error row (cue fields NULL)."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    for c in parse_srt(str(payload)):
-                        rows.append({"media_id": str(mid), **c,
-                                     "status": "ok", "error_msg": None})
-                except Exception as exc:
-                    rows.append({"media_id": str(mid), "cue_idx": None,
-                                 "start_ms": None, "end_ms": None,
-                                 "dur_ms": None, "text": None,
-                                 "n_lines": None, "status": "parse_error",
-                                 "error_msg":
-                                 f"{type(exc).__name__}: {exc}"})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, SRT_SCHEMA)
+    return _map_media(
+        df, lambda p: [{**c, "status": "ok"} for c in parse_srt(str(p))],
+        SRT_SCHEMA, payload_col, id_col, explode=True,
+        error_status="parse_error")

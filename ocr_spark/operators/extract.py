@@ -12,6 +12,12 @@ Python inside the batch kernel is the allowed pattern (SURVEY.md
 §2.3).  The kernel is the *same* function as the pytest oracle
 (`ocr_spark.extractor.core.extract_bytes`), which is what makes
 byte-equality structural rather than aspirational.
+
+Every other per-document operator (the head/link/date/charset side
+operators here, and the structure, media, caption and OCR operators)
+runs through the one shared batch path, :func:`map_payloads`.  Only
+:func:`extract_pages`, the job's hot path, keeps its own kernel: it
+assembles the spans column from flat arrays.
 """
 
 from __future__ import annotations
@@ -22,7 +28,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ocr_spark.extractor.core import extract_bytes
+from ocr_spark.extractor.core import (decode_html, extract_bytes,
+                                      extract_hreflang, extract_http_equiv,
+                                      extract_jsonld, extract_meta,
+                                      extract_meta_kv, extract_microdata,
+                                      extract_publish_date,
+                                      extract_rel_links)
 
 __all__ = ["extract_pages", "extract_meta_pages", "extract_jsonld_pages",
            "extract_microdata_pages", "rel_links_pages",
@@ -196,6 +207,62 @@ def extract_pages(
     return df.select(*cols).mapInArrow(kernel, schema=out_schema)
 
 
+def map_payloads(df: DataFrame, fn, fields: list[T.StructField],
+                 payload_col: str, passthrough: tuple[str, ...],
+                 explode: bool = False,
+                 error_status: str | None = None) -> DataFrame:
+    """The one Arrow batch path under every "one payload in, typed rows
+    out" operator: ``mapInArrow`` over ``passthrough + [payload_col]``,
+    ``fn(payload)`` per row, no pandas frame and no per-row UDF
+    dispatch.
+
+    ``fn`` gets the payload as a Python value (``None`` for NULL) and
+    returns a dict keyed by the ``fields`` names — absent keys are NULL,
+    extra keys are ignored — or, with ``explode``, an iterable of such
+    dicts (zero or more rows per payload).  Each output column takes its
+    Arrow type from its declared ``StructField``.  Passthrough columns
+    are forwarded from the input batch without a copy (``take`` per
+    emitted row when exploding), so the payload never shuffles and only
+    the skinny result rows move downstream.
+
+    ``error_status``: when set, an exception from ``fn`` becomes ONE row
+    whose fields are all NULL except ``status = error_status`` and
+    ``error_msg = "<ExcType>: <message>"`` — the engine's error-rows,
+    not-exceptions taxonomy.  When unset, exceptions fail the task."""
+    cols = [*passthrough, payload_col]
+    out_schema = T.StructType([df.schema[c] for c in passthrough] + fields)
+
+    def kernel(batches):
+        import pyarrow as pa  # executor-side import
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        result = pa.schema([(f.name, to_arrow_type(f.dataType))
+                            for f in fields])
+        n_pass = len(passthrough)
+        for batch in batches:
+            rows: list[dict] = []
+            idx: list[int] = []
+            for i, payload in enumerate(batch.column(n_pass).to_pylist()):
+                try:
+                    got = list(fn(payload)) if explode else [fn(payload)]
+                except Exception as exc:
+                    if error_status is None:
+                        raise
+                    got = [{"status": error_status,
+                            "error_msg": f"{type(exc).__name__}: {exc}"}]
+                rows += got
+                idx += [i] * len(got)
+            arrays = [batch.column(j) for j in range(n_pass)]
+            if explode:
+                take = pa.array(idx, pa.int64())
+                arrays = [a.take(take) for a in arrays]
+            out = pa.RecordBatch.from_pylist(rows, schema=result)
+            yield pa.RecordBatch.from_arrays(
+                arrays + out.columns, [*passthrough, *result.names])
+
+    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+
+
 META_RESULT_FIELDS = [
     T.StructField("title", T.StringType(), True),
     T.StructField("description", T.StringType(), True),
@@ -216,35 +283,11 @@ def extract_meta_pages(
     (services/business_license_processor.py:233-239), extracted
     deterministically by ``extractor.core.extract_meta``.
 
-    Same shape discipline as :func:`extract_pages`: one Arrow-batched
-    kernel pass (``mapInArrow``, no per-row Python dispatch), the
-    binary payload never shuffles, passthrough columns are forwarded
-    zero-copy, output is the skinny field projection."""
-    from ocr_spark.extractor.core import extract_meta
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + META_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            fields = {f.name: [] for f in META_RESULT_FIELDS}
-            for payload in payloads:
-                m = extract_meta(payload if payload is not None else b"")
-                for k, v in fields.items():
-                    v.append(m[k])
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            for f in META_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa.string()))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    One row per page through :func:`map_payloads`: one Arrow-batched
+    pass, the binary payload never shuffles, passthrough columns are
+    forwarded zero-copy, output is the skinny field projection."""
+    return map_payloads(df, lambda p: extract_meta(p or b""),
+                        META_RESULT_FIELDS, payload_col, passthrough)
 
 
 JSONLD_RESULT_FIELDS = [
@@ -268,42 +311,13 @@ def extract_jsonld_pages(
     head fields; extracted by ``extractor.core.extract_jsonld``.
 
     One-to-many per page (a page yields 0..n entity rows), so the
-    Arrow kernel repeats the passthrough values per emitted row — still
-    one batched pass, no per-row Python dispatch, the binary payload
-    never shuffles, malformed blocks come back as ``parse_error`` ROWS
-    (the engine-wide error taxonomy), never exceptions."""
-    from ocr_spark.extractor.core import extract_jsonld
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + JSONLD_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in JSONLD_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for ent in extract_jsonld(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(ent[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"script_idx": pa.int32(), "entity_idx": pa.int32(),
-                        "etype": pa.string(), "name": pa.string(),
-                        "word_count": pa.int64(), "status": pa.string()}
-            for f in JSONLD_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    passthrough values repeat per emitted row — still one batched pass,
+    the binary payload never shuffles, malformed blocks come back as
+    ``parse_error`` ROWS (the engine-wide error taxonomy), never
+    exceptions."""
+    return map_payloads(df, lambda p: extract_jsonld(p or b""),
+                        JSONLD_RESULT_FIELDS, payload_col, passthrough,
+                        explode=True)
 
 
 HTTP_EQUIV_RESULT_FIELDS = [
@@ -322,38 +336,10 @@ def http_equiv_pages(
     """Head directives per page (one row each): declared language
     (``<html lang>`` + http-equiv content-language) and meta-refresh
     redirect target; extracted by ``extractor.core.extract_http_equiv``.
-    One-to-ONE per page (unlike the jsonld/microdata kernels), same
-    Arrow discipline: one batched pass, payload never shuffles."""
-    from ocr_spark.extractor.core import extract_http_equiv
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + HTTP_EQUIV_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            fields = {f.name: [] for f in HTTP_EQUIV_RESULT_FIELDS}
-            for payload in payloads:
-                row = extract_http_equiv(
-                    payload if payload is not None else b"")
-                for k in fields:
-                    fields[k].append(row[k])
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"html_lang": pa.string(),
-                        "content_language": pa.string(),
-                        "refresh_delay": pa.int32(),
-                        "refresh_url": pa.string()}
-            for f in HTTP_EQUIV_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    One-to-ONE per page (unlike the jsonld/microdata operators), one
+    batched pass, payload never shuffles."""
+    return map_payloads(df, lambda p: extract_http_equiv(p or b""),
+                        HTTP_EQUIV_RESULT_FIELDS, payload_col, passthrough)
 
 
 REL_LINK_RESULT_FIELDS = [
@@ -369,45 +355,14 @@ def rel_links_pages(
     passthrough: tuple[str, ...] = ("url",),
 ) -> DataFrame:
     """Typed link relations per page (``<link>/<a>/<area>`` with
-    rel+href -> ``(link_idx, rel, href)`` rows): the generic kernel
+    rel+href -> ``(link_idx, rel, href)`` rows): the generic extraction
     under pagination discovery (rel=next/prev), canonicalization
     (rel=canonical) and feed discovery (rel=alternate); extracted by
-    ``extractor.core.extract_rel_links``.
-
-    Same Arrow discipline as the jsonld/microdata kernels: one batched
-    pass, passthrough repeated per emitted row, the binary payload
-    never shuffles."""
-    from ocr_spark.extractor.core import extract_rel_links
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + REL_LINK_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in REL_LINK_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_rel_links(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"link_idx": pa.int32(), "rel": pa.string(),
-                        "href": pa.string()}
-            for f in REL_LINK_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    ``extractor.core.extract_rel_links``.  One-to-many per page, like
+    the jsonld/microdata operators."""
+    return map_payloads(df, lambda p: extract_rel_links(p or b""),
+                        REL_LINK_RESULT_FIELDS, payload_col, passthrough,
+                        explode=True)
 
 
 HREFLANG_RESULT_FIELDS = [
@@ -426,42 +381,11 @@ def hreflang_pages(
     rel="alternate" hreflang href>`` -> ``(link_idx, hreflang, href)``
     rows): the extraction surface under multilingual translation-group
     alignment (:func:`ocr_spark.operators.web.hreflang_groups`);
-    extracted by ``extractor.core.extract_hreflang``.
-
-    Same Arrow discipline as the rel-link kernel: one batched pass,
-    passthrough repeated per emitted row, the binary payload never
-    shuffles."""
-    from ocr_spark.extractor.core import extract_hreflang
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + HREFLANG_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in HREFLANG_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_hreflang(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"link_idx": pa.int32(), "hreflang": pa.string(),
-                        "href": pa.string()}
-            for f in HREFLANG_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    extracted by ``extractor.core.extract_hreflang``.  One-to-many per
+    page, like :func:`rel_links_pages`."""
+    return map_payloads(df, lambda p: extract_hreflang(p or b""),
+                        HREFLANG_RESULT_FIELDS, payload_col, passthrough,
+                        explode=True)
 
 
 PUBLISH_DATE_RESULT_FIELDS = [
@@ -480,45 +404,19 @@ def publish_date_pages(
     """Publish-date extraction per page (htmldate-style precedence):
     the in-markup sources (JSON-LD datePublished > article:
     published_time meta > first <time datetime>) come from ONE
-    Arrow-batched kernel pass (``extractor.core.
-    extract_publish_date``), and the final fallback — a /YYYY/MM/DD/
-    url-path segment — is pure JVM expression work (regexp_extract +
-    try_to_date) on the passthrough url, costing no Python at all.
-    One row per page: (passthrough..., source, published_raw,
-    published); all three NULL when no source yields a valid date.
+    Arrow-batched pass (``extractor.core.extract_publish_date``), and
+    the final fallback — a /YYYY/MM/DD/ url-path segment — is pure JVM
+    expression work (regexp_extract + try_to_date) on the passthrough
+    url, costing no Python at all.  One row per page: (passthrough...,
+    source, published_raw, published); all three NULL when no source
+    yields a valid date.
 
-    Scale: the binary payload never shuffles (kernel is a map), the
-    fallback is whole-stage-codegen'd, and the output is a skinny
+    Scale: the binary payload never shuffles (the extraction is a map),
+    the fallback is whole-stage-codegen'd, and the output is a skinny
     (url, date) projection ready for freshness joins."""
-    from ocr_spark.extractor.core import extract_publish_date
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + PUBLISH_DATE_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            fields = {f.name: [] for f in PUBLISH_DATE_RESULT_FIELDS}
-            for payload in payloads:
-                row = extract_publish_date(
-                    payload if payload is not None else b"")
-                for k in fields:
-                    fields[k].append(row[k])
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"source": pa.string(),
-                        "published_raw": pa.string(),
-                        "published": pa.date32()}
-            for f in PUBLISH_DATE_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    marked = df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    marked = map_payloads(df, lambda p: extract_publish_date(p or b""),
+                          PUBLISH_DATE_RESULT_FIELDS, payload_col,
+                          passthrough)
     pat = r"/(\d{4})/(\d{2})/(\d{2})/"
     g = [F.regexp_extract(F.col(url_col), pat, i) for i in (1, 2, 3)]
     url_date = F.try_to_date(
@@ -553,42 +451,13 @@ def meta_kv_pages(
 ) -> DataFrame:
     """Namespaced meta key/value rows per page (Open Graph /
     Twitter-card / article:* tags -> ``(idx, key, content)``):
-    the generic kernel under social-card assembly
+    the generic extraction under social-card assembly
     (:func:`social_cards`); extracted by ``extractor.core.
-    extract_meta_kv``.  Same Arrow discipline as the rel-link kernel:
-    one batched pass, the binary payload never shuffles."""
-    from ocr_spark.extractor.core import extract_meta_kv
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + META_KV_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in META_KV_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_meta_kv(
-                        payload if payload is not None else b"",
-                        prefixes):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"idx": pa.int32(), "key": pa.string(),
-                        "content": pa.string()}
-            for f in META_KV_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    extract_meta_kv``.  One-to-many per page, like
+    :func:`rel_links_pages`."""
+    return map_payloads(df, lambda p: extract_meta_kv(p or b"", prefixes),
+                        META_KV_RESULT_FIELDS, payload_col, passthrough,
+                        explode=True)
 
 
 def social_cards(kv: DataFrame, ids: DataFrame,
@@ -650,43 +519,19 @@ def extract_microdata_pages(
     the in-markup sibling of :func:`extract_jsonld_pages`; extracted by
     ``extractor.core.extract_microdata``.
 
-    Same shape discipline as the jsonld kernel: one-to-many per page
-    with passthrough values repeated per emitted row, ONE Arrow-batched
-    pass (no per-row Python dispatch), the binary payload never
-    shuffles, and orphaned itemprops come back as ``orphan_prop`` ROWS
-    rather than exceptions."""
-    from ocr_spark.extractor.core import extract_microdata
+    Same shape as the jsonld operator: one-to-many per page with
+    passthrough values repeated per emitted row, ONE Arrow-batched pass,
+    the binary payload never shuffles, and orphaned itemprops come back
+    as ``orphan_prop`` ROWS rather than exceptions."""
+    return map_payloads(df, lambda p: extract_microdata(p or b""),
+                        MICRODATA_RESULT_FIELDS, payload_col, passthrough,
+                        explode=True)
 
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + MICRODATA_RESULT_FIELDS
-    )
 
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in MICRODATA_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_microdata(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"item_idx": pa.int32(), "item_type": pa.string(),
-                        "prop": pa.string(), "value": pa.string(),
-                        "status": pa.string()}
-            for f in MICRODATA_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+CHARSET_RESULT_FIELDS = [
+    T.StructField("codec", T.StringType(), True),
+    T.StructField("text", T.StringType(), True),
+]
 
 
 def sniff_charsets(
@@ -702,35 +547,13 @@ def sniff_charsets(
 
     Mirrors the reference's mime/encoding dispatch ahead of its
     extractor (services/file_processor.py:30-47).  One ``mapInArrow``
-    kernel pass (no per-row Python dispatch); emits the detected
-    ``codec`` plus the decoded ``text`` (replacement-char policy, never
-    fails) so downstream ops are bytes-free."""
-    from ocr_spark.extractor.core import decode_html
+    pass (:func:`map_payloads`); emits the detected ``codec`` plus the
+    decoded ``text`` (replacement-char policy, never fails) so
+    downstream ops are bytes-free."""
 
-    cols = list(passthrough) + [payload_col]
-    out_fields = [T.StructField("codec", T.StringType()),
-                  T.StructField("text", T.StringType())]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + out_fields
-    )
+    def sniff(payload):
+        text, codec = decode_html(payload or b"")
+        return {"codec": codec, "text": text}
 
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            codecs, texts = [], []
-            for payload in payloads:
-                text, codec = decode_html(payload if payload is not None
-                                          else b"")
-                codecs.append(codec)
-                texts.append(text)
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            arrays.append(pa.array(codecs, pa.string()))
-            names.append("codec")
-            arrays.append(pa.array(texts, pa.string()))
-            names.append("text")
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return map_payloads(df, sniff, CHARSET_RESULT_FIELDS, payload_col,
+                        passthrough)

@@ -1,7 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
 The engine treats media exactly like html: an opaque BinaryType column
-plus typed metadata, processed in Arrow batches via ``mapInPandas``.
+plus typed metadata, processed in Arrow batches through the same
+per-payload batch path as the html operators (``extract.map_payloads``,
+wrapped by :func:`_map_media`).
 
 What is REAL without any codec: magic-byte validity classification and
 header-derived dimensions for PNG/JPEG/GIF/TIFF (O4 semantics — the
@@ -26,9 +28,11 @@ import struct
 import zlib
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_spark.extractor.core import parse_image_header
+from ocr_spark.operators.extract import map_payloads
 
 __all__ = ["MEDIA_SCHEMA", "EXIF_SCHEMA", "AHASH_SCHEMA", "decode_media",
            "decode_png_pixels", "decode_wav_samples", "parse_exif",
@@ -54,6 +58,20 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("error_msg", T.StringType(), True),
     ]
 )
+
+
+def _map_media(df: DataFrame, fn, schema: T.StructType, payload_col: str,
+               id_col: str, **kw) -> DataFrame:
+    """Per-payload media rows through :func:`map_payloads`: ``schema``
+    is ``media_id`` (the id column as a string) followed by ``fn``'s
+    fields.  Where the schema declares ``media_id`` non-NULL, a NULL id
+    reads as the string 'None'."""
+    media_id = F.col(id_col).cast("string")
+    if not schema["media_id"].nullable:
+        media_id = F.coalesce(media_id, F.lit("None"))
+    media = df.select(media_id.alias("media_id"), payload_col)
+    return map_payloads(media, fn, schema.fields[1:], payload_col,
+                        ("media_id",), **kw)
 
 
 # PNG color type -> samples per pixel (8-bit depth only).  Type 3
@@ -361,25 +379,9 @@ def image_dhash(df: DataFrame, payload_col: str = "payload",
     """Per-image difference-hash rows — same schema, batching, and
     error taxonomy as :func:`image_ahash` (the two hashes are drop-in
     alternatives feeding the same near-dup blocking)."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "width": None, "height": None,
-                        "ahash_bits": None, "ahash_hex": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(dhash_from_png(bytes(payload), grid=grid))
-                except Exception as exc:
-                    base["status"] = "processing_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, AHASH_SCHEMA)
+    return _map_media(
+        df, lambda p: {"status": "ok", **dhash_from_png(bytes(p), grid=grid)},
+        AHASH_SCHEMA, payload_col, id_col, error_status="processing_error")
 
 
 def image_ahash(df: DataFrame, payload_col: str = "payload",
@@ -389,25 +391,9 @@ def image_ahash(df: DataFrame, payload_col: str = "payload",
     ``processing_error`` ROWS).  The binary column never shuffles —
     the hash is computed where the bytes already live, and only the
     80-byte hash row moves downstream."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "width": None, "height": None,
-                        "ahash_bits": None, "ahash_hex": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(ahash_from_png(bytes(payload), grid=grid))
-                except Exception as exc:
-                    base["status"] = "processing_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, AHASH_SCHEMA)
+    return _map_media(
+        df, lambda p: {"status": "ok", **ahash_from_png(bytes(p), grid=grid)},
+        AHASH_SCHEMA, payload_col, id_col, error_status="processing_error")
 
 
 def ahash_near_dup(hashes: DataFrame, max_hamming: int = 3,
@@ -585,26 +571,9 @@ def gif_structure(df: DataFrame, payload_col: str = "payload",
                   id_col: str = "media_id") -> DataFrame:
     """Animated-GIF structure rows per binary — same Arrow-batched
     shape and error taxonomy as :func:`decode_media`."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "width": None, "height": None,
-                        "n_frames": None, "total_ms": None,
-                        "loop_count": None, "has_gct": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(parse_gif_structure(bytes(payload)))
-                except Exception as exc:
-                    base["status"] = "parse_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, GIF_SCHEMA)
+    return _map_media(
+        df, lambda p: {"status": "ok", **parse_gif_structure(bytes(p))},
+        GIF_SCHEMA, payload_col, id_col, error_status="parse_error")
 
 
 SEGMENT_SCHEMA = T.StructType(
@@ -645,62 +614,36 @@ def audio_segments(df: DataFrame, frame_samples: int = 200,
     seg_idx NULL), never exceptions; the binary column never
     shuffles."""
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def segments(payload):
+        n_ch, rate, s = _decode_wav_raw(bytes(payload))
+        n_fr = int(s.size) // n_ch          # per-channel frames
+        s = s[:n_fr * n_ch]
+        sq = s * s
+        step = frame_samples * n_ch
+        rows = []
+        seg_start = seg_energy = None
+        n_frames = (n_fr + frame_samples - 1) // frame_samples
+        for f in range(n_frames):
+            chunk = sq[f * step:(f + 1) * step]
+            e = int(chunk.sum())
+            loud = e > threshold * int(chunk.size)
+            if loud and seg_start is None:
+                seg_start, seg_energy = f, e
+            elif loud:
+                seg_energy += e
+            if seg_start is not None and (not loud or f == n_frames - 1):
+                end_f = f if not loud else f + 1
+                rows.append({
+                    "seg_idx": len(rows), "start_frame": seg_start,
+                    "n_frames": end_f - seg_start,
+                    "start_ms": seg_start * frame_samples * 1000 // rate,
+                    "end_ms": min(end_f * frame_samples, n_fr) * 1000 // rate,
+                    "energy": seg_energy, "status": "ok"})
+                seg_start = None
+        return rows or [{"status": "silent"}]
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    n_ch, rate, s = _decode_wav_raw(bytes(payload))
-                    n_fr = int(s.size) // n_ch          # per-channel frames
-                    s = s[:n_fr * n_ch]
-                    sq = s * s
-                    step = frame_samples * n_ch
-                    n_frames = (n_fr + frame_samples - 1) // frame_samples
-                    seg_start = seg_energy = None
-                    seg_idx = 0
-                    emitted = False
-                    for f in range(n_frames):
-                        chunk = sq[f * step:(f + 1) * step]
-                        e = int(chunk.sum())
-                        loud = e > threshold * int(chunk.size)
-                        if loud and seg_start is None:
-                            seg_start, seg_energy = f, e
-                        elif loud:
-                            seg_energy += e
-                        if seg_start is not None and (
-                                not loud or f == n_frames - 1):
-                            end_f = f if not loud else f + 1
-                            rows.append({
-                                "media_id": str(mid), "seg_idx": seg_idx,
-                                "start_frame": seg_start,
-                                "n_frames": end_f - seg_start,
-                                "start_ms": seg_start * frame_samples
-                                * 1000 // rate,
-                                "end_ms": min(end_f * frame_samples, n_fr)
-                                * 1000 // rate,
-                                "energy": seg_energy,
-                                "status": "ok", "error_msg": None})
-                            seg_idx += 1
-                            seg_start = None
-                            emitted = True
-                    if not emitted:
-                        rows.append({"media_id": str(mid), "seg_idx": None,
-                                     "start_frame": None, "n_frames": None,
-                                     "start_ms": None, "end_ms": None,
-                                     "energy": None, "status": "silent",
-                                     "error_msg": None})
-                except Exception as exc:
-                    rows.append({"media_id": str(mid), "seg_idx": None,
-                                 "start_frame": None, "n_frames": None,
-                                 "start_ms": None, "end_ms": None,
-                                 "energy": None, "status": "processing_error",
-                                 "error_msg": f"{type(exc).__name__}: {exc}"})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, SEGMENT_SCHEMA)
+    return _map_media(df, segments, SEGMENT_SCHEMA, payload_col, id_col,
+                      explode=True, error_status="processing_error")
 
 
 def _fake_decode(payload: bytes) -> dict:
@@ -730,37 +673,19 @@ def decode_media(df: DataFrame, payload_col: str = "payload",
     PIL/torchvision decode + resize + embed) is supplied."""
     fn = decode_fn or (_fake_decode if fake else None)
 
-    def kernel(batches):
-        import pandas as pd
+    def decode(payload):
+        if fn is not None:
+            return {"status": "ok", **fn(bytes(payload))}
+        hdr = parse_image_header(bytes(payload))
+        if hdr is None:
+            return {"status": "processing_error", "error_msg": (
+                "NotImplementedError: not an image header and no media "
+                "codec in this environment; pass decode_fn or fake=True")}
+        return {"kind": "image", "width": hdr["width"],
+                "height": hdr["height"], "n_frames": 1, "status": "ok"}
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "kind": None, "width": None,
-                        "height": None, "duration_ms": None, "n_frames": None,
-                        "feature": None, "status": "ok", "error_msg": None}
-                if fn is None:
-                    hdr = parse_image_header(bytes(payload))
-                    if hdr is not None:
-                        base.update({"kind": "image", "width": hdr["width"],
-                                     "height": hdr["height"], "n_frames": 1})
-                    else:
-                        base["status"] = "processing_error"
-                        base["error_msg"] = (
-                            "NotImplementedError: not an image header and no "
-                            "media codec in this environment; pass decode_fn "
-                            "or fake=True"
-                        )
-                else:
-                    try:
-                        base.update(fn(bytes(payload)))
-                    except Exception as exc:  # error rows, not exceptions
-                        base["status"] = "processing_error"
-                        base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, MEDIA_SCHEMA)
+    return _map_media(df, decode, MEDIA_SCHEMA, payload_col, id_col,
+                      error_status="processing_error")
 
 
 EXIF_SCHEMA = T.StructType(
@@ -857,63 +782,40 @@ def exif_extract(df: DataFrame, payload_col: str = "payload",
     and error taxonomy as :func:`decode_media` (malformed payloads are
     ``parse_error`` ROWS, never exceptions; the binary column never
     shuffles)."""
+    return _map_media(
+        df, lambda p: {"status": "ok", **parse_exif(bytes(p))},
+        EXIF_SCHEMA, payload_col, id_col, error_status="parse_error")
 
-    def kernel(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "byte_order": None,
-                        "orientation": None, "datetime": None,
-                        "has_gps": None, "n_ifd0_entries": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(parse_exif(bytes(payload)))
-                except Exception as exc:
-                    base["status"] = "parse_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, EXIF_SCHEMA)
+FRAME_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.StringType(), False),
+        T.StructField("frame_idx", T.IntegerType(), False),
+        T.StructField("frame_digest", T.StringType(), True),
+        T.StructField("status", T.StringType(), True),
+    ]
+)
 
 
 def sample_frames(df: DataFrame, every_n: int = 10,
                   payload_col: str = "payload",
                   id_col: str = "media_id", fake: bool = False) -> DataFrame:
     """Frame-sampling plumbing: one output row per sampled frame index.
-    Frame decode itself is stubbed like decode_media."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.StringType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-            T.StructField("frame_digest", T.StringType(), True),
-            T.StructField("status", T.StringType(), True),
-        ]
-    )
+    Frame decode itself is stubbed like decode_media: without ``fake``
+    each payload yields one ``frame_idx = -1`` processing_error row."""
 
-    def kernel(batches):
-        import pandas as pd
+    def frames(payload):
+        if not fake:
+            return [{"frame_idx": -1, "status": "processing_error"}]
+        payload = bytes(payload)
+        # payload:index digest — ':'+decimal keeps the frame key
+        # VARCHAR-expressible so the SQL oracle can reproduce it
+        # (sha256 is VARCHAR-only in DuckDB)
+        return [{"frame_idx": idx, "status": "ok",
+                 "frame_digest": hashlib.sha256(
+                     payload + b":" + str(idx).encode()).hexdigest()[:16]}
+                for idx in range(0, _fake_decode(payload)["n_frames"],
+                                 every_n)]
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if not fake:
-                    rows.append({"media_id": str(mid), "frame_idx": -1,
-                                 "frame_digest": None,
-                                 "status": "processing_error"})
-                    continue
-                meta = _fake_decode(bytes(payload))
-                for idx in range(0, meta["n_frames"], every_n):
-                    # payload:index digest — ':'+decimal keeps the frame
-                    # key VARCHAR-expressible so the SQL oracle can
-                    # reproduce it (sha256 is VARCHAR-only in DuckDB)
-                    digest = hashlib.sha256(
-                        bytes(payload) + b":" + str(idx).encode()
-                    ).hexdigest()[:16]
-                    rows.append({"media_id": str(mid), "frame_idx": idx,
-                                 "frame_digest": digest, "status": "ok"})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, schema)
+    return _map_media(df, frames, FRAME_SCHEMA, payload_col, id_col,
+                      explode=True)

@@ -75,6 +75,15 @@ GC_JVM_OPTS = ("-XX:G1HeapRegionSize=32m "
                "-XX:MetaspaceSize=256m")
 
 
+def _default_driver_mem() -> str:
+    """Local-mode driver heap: a quarter of the host's physical memory,
+    capped at 32g.  The heap is pinned with -Xms (see GC_JVM_OPTS), so
+    it must fit in RAM or the JVM fails to start; a fixed 32g does not
+    fit a 16 GB host.  ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(total // 4, 32 << 30) >> 20}m"
+
+
 def get_spark(app: str = "ocr_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra: dict | None = None) -> SparkSession:
@@ -85,7 +94,8 @@ def get_spark(app: str = "ocr_spark", cores: int | None = None,
     builder = SparkSession.builder.appName(app)
     if not os.environ.get("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
         builder = builder.master(f"local[{cores}]" if cores else "local[*]")
-        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+        heap = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_mem())
         builder = builder.config("spark.driver.memory", heap)
         # local mode: the driver JVM is the executor; -Xms pins the
         # heap (Spark passes only -Xmx to the driver — see GC_JVM_OPTS

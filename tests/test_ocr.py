@@ -67,6 +67,21 @@ def test_roundtrip_rgb_luma_path():
     assert decode_glyph_text(png)["text"] == text
 
 
+def test_grey_alpha_luma_ignores_alpha():
+    """Grey+alpha PNGs binarize on the grey channel alone: opaque ink
+    of grey level 2 averaged with its alpha (255) would land at the
+    threshold and read as blank paper."""
+    from ocr_spark.data.synth import build_png
+
+    text = "GA INK"
+    w, h, grid = render_text_pixels(text, ink=2)
+    png = build_png(w, h, color_type=4,
+                    pixel_fn=lambda i, c: grid[i] if c == 0 else 255)
+    got = decode_glyph_text(png)
+    assert got["text"] == text
+    assert got["n_glyphs"] == len(text.replace(" ", ""))
+
+
 def test_unknown_glyph_reads_as_question_mark():
     """A pattern off the alphabet must decode as '?' and count in
     n_unknown — never silently match the nearest template."""
@@ -107,3 +122,24 @@ def test_ocr_decode_operator_rows_and_error_taxonomy(spark):
     assert got["9"]["status"] == "processing_error"
     assert got["9"]["text"] is None
     assert got["9"]["error_msg"]
+
+
+def test_ocr_decode_query_plants_na_for_null_text(spark, tmp_path):
+    """q_ocr_decode renders 'NA' for a NULL document text, as it does
+    for an empty one, instead of failing the query; the DuckDB twin
+    agrees row for row."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+
+    docs = str(tmp_path / "documents.parquet")
+    duckdb.sql("SELECT * FROM (VALUES (1, NULL::VARCHAR), (2, 'row two')) "
+               "t(doc_id, text)").write_parquet(docs)
+    got = sorted(tuple(r) for r in
+                 entry_mod.q_ocr_decode(spark, str(tmp_path)).collect())
+    assert got == [(1, "NA", 2, "ok"), (2, "ROW TWO", 6, "ok")]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS "
+                f"SELECT * FROM read_parquet('{docs}')")
+    want = con.execute(entry_mod.oracle_sql()["ocr_decode"]).fetchall()
+    assert sorted(tuple(r) for r in want) == got

@@ -412,6 +412,88 @@ def test_multimodal_stub_and_fake(spark):
     assert len(frames) > 0
 
 
+def test_map_payloads_explode_with_no_rows_keeps_schema(spark):
+    """An exploding operator over a batch where no payload emits a row
+    yields zero rows, still typed by the declared schema."""
+    from pyspark.sql import types as T
+
+    from ocr_spark.operators.extract import map_payloads
+    from ocr_spark.operators.structure import extract_tables
+
+    df = spark.createDataFrame(
+        [("u1", bytearray(b"<p>no tables</p>")), ("u2", None)],
+        "url string, html binary")
+    cells = extract_tables(df)
+    assert cells.collect() == []
+    assert cells.schema.simpleString() == (
+        "struct<url:string,table_idx:int,row_idx:int,col_idx:int,"
+        "is_header:boolean,cell:string>")
+    assert [f.nullable for f in cells.schema.fields] == [
+        True, False, False, False, False, False]
+
+    fields = [T.StructField("k", T.LongType(), True),
+              T.StructField("when", T.DateType(), True)]
+    none = map_payloads(df, lambda p: [], fields, "html", ("url",),
+                        explode=True)
+    assert none.collect() == []
+    assert none.schema == T.StructType([df.schema["url"]] + fields)
+
+
+def test_map_payloads_null_payload(spark):
+    """A NULL payload reaches the per-payload function as None; each
+    operator keeps its own NULL policy (empty page, NULL field, no
+    rows, or an error row)."""
+    from ocr_spark.operators.extract import extract_meta_pages
+    from ocr_spark.operators.multimodal import image_ahash
+    from ocr_spark.operators.structure import html_markdown
+
+    df = spark.createDataFrame([("u1", None)], "url string, html binary")
+    meta = extract_meta_pages(df).collect()
+    assert [tuple(r) for r in meta] == [("u1", None, None, None, None, None)]
+    assert [tuple(r) for r in html_markdown(df).collect()] == [("u1", None)]
+
+    media = df.select(F.col("url").alias("media_id"),
+                      F.col("html").alias("payload"))
+    (row,) = image_ahash(media).collect()
+    assert row.media_id == "u1" and row.status == "processing_error"
+    assert row.error_msg.startswith("TypeError: ")
+    assert row.width is None and row.ahash_hex is None
+
+
+def test_map_payloads_raising_fn_is_one_error_row(spark):
+    """With ``error_status``, a payload whose function raises yields
+    exactly ONE row: passthrough kept, every field NULL except status
+    and error_msg; other payloads in the same batch are unaffected.
+    Without it, the exception fails the job."""
+    from pyspark.sql import types as T
+
+    from ocr_spark.operators.extract import map_payloads
+
+    fields = [T.StructField("n", T.IntegerType(), True),
+              T.StructField("tag", T.StringType(), True),
+              T.StructField("status", T.StringType(), True),
+              T.StructField("error_msg", T.StringType(), True)]
+
+    def fn(payload):
+        if payload == "bad":
+            raise ValueError("bad payload")
+        return [{"n": i, "tag": payload, "status": "ok"} for i in range(2)]
+
+    df = spark.createDataFrame([(1, "x"), (2, "bad"), (3, "y")],
+                               "id long, payload string")
+    rows = sorted(tuple(r) for r in map_payloads(
+        df, fn, fields, "payload", ("id",), explode=True,
+        error_status="parse_error").collect())
+    assert rows == [
+        (1, 0, "x", "ok", None), (1, 1, "x", "ok", None),
+        (2, None, None, "parse_error", "ValueError: bad payload"),
+        (3, 0, "y", "ok", None), (3, 1, "y", "ok", None)]
+
+    with pytest.raises(Exception, match="bad payload"):
+        map_payloads(df, fn, fields, "payload", ("id",),
+                     explode=True).collect()
+
+
 # --------------------------------------------------------------------------
 # IVF ANN
 # --------------------------------------------------------------------------
