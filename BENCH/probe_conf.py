@@ -32,7 +32,7 @@ def main() -> None:
     from ocr_spark.session import get_spark
 
     extra = dict(c.split("=", 1) for c in args.conf)
-    os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark_scratch")
+    os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/spark_scratch")
     import shutil
     shutil.rmtree(args.output, ignore_errors=True)
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

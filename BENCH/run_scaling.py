@@ -81,8 +81,8 @@ def run_once(corpus: str, cores: int, tag: str,
     out = os.path.join(out_root, f"scaling_out_{tag}")
     shutil.rmtree(out, ignore_errors=True)
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
-    env["SPARK_GRAFT_LOCAL_DIR"] = env.get("SPARK_GRAFT_LOCAL_DIR", scratch)
-    os.makedirs(env["SPARK_GRAFT_LOCAL_DIR"], exist_ok=True)
+    env["SPARK_LOCAL_DIRS"] = env.get("SPARK_LOCAL_DIRS", scratch)
+    os.makedirs(env["SPARK_LOCAL_DIRS"], exist_ok=True)
     bw0 = membw_mbps()
     cpu0 = read_cpu()
     proc = subprocess.run(

@@ -45,8 +45,8 @@ def job_run(corpus: str, cores: int, tag: str) -> dict:
     import shutil
     shutil.rmtree(out, ignore_errors=True)
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
-    env.setdefault("SPARK_GRAFT_LOCAL_DIR", "/root/spark_scratch")
-    os.makedirs(env["SPARK_GRAFT_LOCAL_DIR"], exist_ok=True)
+    env.setdefault("SPARK_LOCAL_DIRS", "/tmp/ocr_spark_bench/spark_scratch")
+    os.makedirs(env["SPARK_LOCAL_DIRS"], exist_ok=True)
     proc = subprocess.run(
         [sys.executable, os.path.join(ROOT, "job.py"),
          "--input", corpus, "--output", out,

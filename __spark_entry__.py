@@ -4444,6 +4444,23 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_scratch(query: str) -> str:
+    """The scratch tree (source, sink, checkpoint) of one streaming
+    query: one fixed directory per query per process, emptied at the
+    start of each call, so repeated calls do not leave a tree each.  It
+    cannot be removed on return: the returned DataFrame reads the sink
+    lazily."""
+    import os
+    import shutil
+    import tempfile
+
+    base = os.path.join(tempfile.gettempdir(),
+                        f"ocr_spark_{query}_{os.getpid()}")
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+    return base
+
+
 def q_stream_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming surface through the DRIVER gate: a bounded
     trigger(availableNow) run of streaming/stream.py's file-source ->
@@ -4458,12 +4475,11 @@ def q_stream_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded-stream path end-to-end with real source/checkpoint/
     sink machinery."""
     import os
-    import tempfile
 
     from ocr_spark.streaming.stream import (read_pages_stream,
                                             run_stream_to_parquet)
 
-    base = tempfile.mkdtemp(prefix="ocr_spark_stream_extract_")
+    base = _stream_scratch("stream_extract")
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -4499,11 +4515,10 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing sessions on an unbounded stream is processing-time
     behavior, certified in tests/test_streaming.py.)"""
     import os
-    import tempfile
 
     from ocr_spark.streaming.stream import sessionize_stream
 
-    base = tempfile.mkdtemp(prefix="ocr_spark_stream_sess_")
+    base = _stream_scratch("stream_sess")
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")

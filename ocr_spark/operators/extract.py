@@ -130,7 +130,10 @@ def extract_pages(
     # boilerplate-heavy corpora.
     def kernel(batches):
         import pyarrow as pa  # executor-side import
+        from pyspark.sql.pandas.types import to_arrow_type
 
+        types = {f.name: to_arrow_type(f.dataType) for f in result_fields}
+        span_fields = list(to_arrow_type(SPAN_TYPE).value_type)
         state = {"prev_key": None}  # streaming dedup; partition == key scope
         for batch in batches:
             if dedup_first is not None and batch.num_rows:
@@ -176,33 +179,23 @@ def extract_pages(
                 bytes_in.append(len(payload) if payload is not None else 0)
                 bytes_out.append(len(r["text"].encode("utf-8")))
                 extract_ms.append(dt_ms)
+            vals = {"text": texts, "n_blocks": n_blocks, "status": status,
+                    "error_msg": error_msg, "doc_kind": doc_kind,
+                    "bytes_in": bytes_in, "bytes_out": bytes_out,
+                    "extract_ms": extract_ms}
+            flat = {"start": s_start, "end": s_end, "kind": s_kind}
             arrays = [batch.column(cols.index(c)) for c in passthrough]
-            names = list(passthrough)
-            arrays.append(pa.array(texts, pa.string()))
-            names.append("text")
-            if with_spans:
+            for f in result_fields:
+                if f.name != "spans":
+                    arrays.append(pa.array(vals[f.name], types[f.name]))
+                    continue
                 arrays.append(pa.ListArray.from_arrays(
                     pa.array(s_offsets, pa.int32()),
                     pa.StructArray.from_arrays(
-                        [pa.array(s_start, pa.int64()),
-                         pa.array(s_end, pa.int64()),
-                         pa.array(s_kind, pa.string())],
-                        ["start", "end", "kind"],
-                    ),
-                ))
-                names.append("spans")
-            for nm, vals, typ in (
-                ("n_blocks", n_blocks, pa.int32()),
-                ("status", status, pa.string()),
-                ("error_msg", error_msg, pa.string()),
-                ("doc_kind", doc_kind, pa.string()),
-                ("bytes_in", bytes_in, pa.int64()),
-                ("bytes_out", bytes_out, pa.int64()),
-                ("extract_ms", extract_ms, pa.int64()),
-            ):
-                arrays.append(pa.array(vals, typ))
-                names.append(nm)
-            yield pa.RecordBatch.from_arrays(arrays, names)
+                        [pa.array(flat[sf.name], sf.type) for sf in span_fields],
+                        fields=span_fields),
+                    type=types["spans"]))
+            yield pa.RecordBatch.from_arrays(arrays, out_schema.fieldNames())
 
     return df.select(*cols).mapInArrow(kernel, schema=out_schema)
 

@@ -49,10 +49,20 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.extract import extract_pages
 from ocr_spark.sources.catalog import Catalog, LINEAGE_SCHEMA
 
-__all__ = ["JobConfig", "prepare_pages", "detect_hot_hosts", "probe_skew",
-           "with_salt", "run_extraction_job"]
+__all__ = ["JobConfig", "prepare_pages", "probe_skew", "with_salt",
+           "run_extraction_job"]
 
 _HOST_RE = r"^[a-z][a-z0-9+.\-]*://([^/]+)"
+
+# a host is hot (wide salt fan-out) when its estimated doc count OR
+# html bytes reach these thresholds
+HOT_COUNT_THRESHOLD = 1000
+# hosts are weighed by sampled html bytes as well as doc counts: the
+# giant-page-on-one-host skew pattern (few huge docs, far below
+# HOT_COUNT_THRESHOLD) would otherwise never trigger the wide fan-out.
+# Cost: the probe's sample scan reads the html column (parquet cannot
+# sample below the scan).
+HOT_BYTES_THRESHOLD = 64 << 20
 
 
 @dataclass
@@ -63,17 +73,7 @@ class JobConfig:
     parallelism: int = 0            # 0 = spark.sql.shuffle.partitions
     base_salts: int = 4
     hot_salts: int = 32
-    hot_count_threshold: int = 1000
-    hot_bytes_threshold: int = 64 << 20
     sample_fraction: float = 0.05   # skew detection reads a sample only
-    # weigh hosts by sampled html bytes as well as doc counts.  Without
-    # this the giant-page-on-one-host skew pattern (few huge docs, far
-    # below hot_count_threshold) never triggers the wide salt fan-out
-    # and hot_bytes_threshold is inert.  Cost: the probe's sample scan
-    # reads the html column (parquet can't sample below the scan), so
-    # at extreme scale where that is unaffordable set sample_bytes=False
-    # and rely on count-based detection only.
-    sample_bytes: bool = True
     # target RAW html bytes per exchange partition.  The html exchange
     # must be sized by DATA, not by core count: partitions follow
     # max(configured parallelism, est_bytes / this target), so a task's
@@ -102,10 +102,6 @@ class JobConfig:
     # cluster the same rule holds: tasks ~ total cores, buckets ~
     # layout (O(4k) at 10^12 docs), never forced equal.
     write_tasks: int = 0
-    # per-lang extraction profiles (O7/O8): dict keyed by lang (plus
-    # 'default'), normalized per config.py:31-42 rules; None = engine
-    # defaults.  Resolved per row inside the Arrow kernel.
-    profiles: dict | None = None
 
 
 def prepare_pages(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -115,50 +111,34 @@ def prepare_pages(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _skew_agg(df: DataFrame, cfg: JobConfig) -> DataFrame:
-    """Sampled per-host aggregate, as a ``rollup`` so the grand-total
-    row (host NULL — a real host can never be NULL, regexp_extract
-    yields '') rides the same map-side partial agg: corpus totals cost
-    nothing beyond the probe scan.  Hot-host filtering stays IN the
-    query so only (hot hosts + 1 total) rows ever reach the driver —
-    host cardinality is unbounded at 10^12 docs."""
+def probe_skew(df: DataFrame, cfg: JobConfig) -> tuple[list, int, int]:
+    """One collected probe pass over a sample -> (hot-host rows, est
+    corpus docs, est corpus html bytes).  Sampling keeps this
+    sub-linear: at 10^12 docs you cannot afford a full scan just to
+    find skew.  The per-host aggregate is a ``rollup``, so the
+    grand-total row (host NULL — a real host can never be NULL,
+    regexp_extract yields '') rides the same map-side partial agg.
+    Hot-host filtering stays IN the query so only (hot hosts + 1 total)
+    rows ever reach the driver — host cardinality is unbounded at
+    10^12 docs.  The totals size the html exchange (see
+    ``JobConfig.exchange_partition_bytes``)."""
     sample = df.sample(fraction=cfg.sample_fraction, seed=42)
     scale = 1.0 / cfg.sample_fraction
-    aggs = [(F.count("*") * scale).cast("long").alias("est_docs")]
-    cond = F.col("est_docs") >= cfg.hot_count_threshold
-    if cfg.sample_bytes:
-        aggs.append(
-            (F.sum(F.octet_length("html")) * scale).cast("long").alias("est_bytes")
-        )
-        cond = cond | (F.col("est_bytes") >= cfg.hot_bytes_threshold)
-    agged = sample.rollup("host").agg(*aggs)
-    return agged.filter(F.col("host").isNull() | cond)
-
-
-def detect_hot_hosts(df: DataFrame, cfg: JobConfig) -> DataFrame:
-    """Sampled per-host count aggregate -> hosts needing a wider salt
-    fan-out.  Sampling keeps this sub-linear: at 10^12 docs you cannot
-    afford a full scan just to find skew.  The probe reads ONLY the url
-    column unless ``sample_bytes`` is set (row-level sampling cannot
-    push below the scan, so weighing by bytes decompresses the html
-    column for the sampled files); see JobConfig.sample_bytes for the
-    default-on rationale and the 100-TB escape hatch."""
-    agged = _skew_agg(df, cfg)
-    return agged.filter(F.col("host").isNotNull()).select("host", "est_docs")
-
-
-def probe_skew(df: DataFrame, cfg: JobConfig) -> tuple[list, int, int]:
-    """One collected probe pass -> (hot-host rows, est corpus docs, est
-    corpus html bytes).  The totals size the html exchange (see
-    ``JobConfig.exchange_partition_bytes``); est_bytes is 0 when
-    ``sample_bytes`` is off."""
-    rows = _skew_agg(df, cfg).collect()
+    rows = (
+        sample.rollup("host")
+        .agg((F.count("*") * scale).cast("long").alias("est_docs"),
+             (F.sum(F.octet_length("html")) * scale).cast("long")
+             .alias("est_bytes"))
+        .filter(F.col("host").isNull()
+                | (F.col("est_docs") >= HOT_COUNT_THRESHOLD)
+                | (F.col("est_bytes") >= HOT_BYTES_THRESHOLD))
+        .collect()
+    )
     hot = [(r.host, r.est_docs) for r in rows if r.host is not None]
     tot = next((r for r in rows if r.host is None), None)
-    est_docs = int(tot.est_docs) if tot is not None else 0
-    est_bytes = (int(tot.est_bytes)
-                 if tot is not None and cfg.sample_bytes else 0)
-    return hot, est_docs, est_bytes
+    if tot is None:
+        return hot, 0, 0
+    return hot, int(tot.est_docs), int(tot.est_bytes or 0)
 
 
 def with_salt(df: DataFrame, hot_hosts: DataFrame, cfg: JobConfig) -> DataFrame:
@@ -208,6 +188,27 @@ def keep_latest(df: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+_TOTAL_KEYS = ("n_docs", "n_ok", "n_err", "bytes_in", "bytes_out")
+
+
+def _run_totals(cat: Catalog, run_id: str) -> dict:
+    """Run totals from the lineage table: one row per bucket of
+    ``run_id``, the latest appended one.  A bucket re-extracted after a
+    crash between its lineage append and its manifest commit has two
+    rows; only the later one describes the data now in the table.  The
+    same read serves a fresh and a resumed run.  All totals are None
+    when the run has no lineage rows."""
+    names = LINEAGE_SCHEMA.fieldNames()
+    latest = {}
+    for row in cat.lineage().read_rows(LINEAGE_SCHEMA):
+        r = dict(zip(names, row))
+        if r["run_id"] == run_id:
+            latest[r["bucket"]] = r
+    if not latest:
+        return dict.fromkeys(_TOTAL_KEYS)
+    return {k: sum(r[k] or 0 for r in latest.values()) for k in _TOTAL_KEYS}
 
 
 def run_extraction_job(
@@ -262,7 +263,6 @@ def run_extraction_job(
     chunks = [all_buckets[i:i + chunk] for i in range(0, len(all_buckets), chunk)]
 
     n_chunks = 0
-    this_run_rows: list = []
     for bucket_ids in chunks:
         part = df.filter(F.col("bucket").isin(bucket_ids)) if len(chunks) > 1 else df
         # THE one wide exchange of html: distribute by (bucket, salt).
@@ -289,8 +289,6 @@ def run_extraction_job(
             all_pages=cfg.all_pages,
             with_spans=cfg.with_spans,
             dedup_first="url" if cfg.dedup else None,
-            profiles=cfg.profiles,
-            profile_col="lang" if cfg.profiles else None,
         )
         # narrow exchange of the (much smaller) extracted output,
         # hash-partitioned by bucket alone: every bucket's rows land in
@@ -308,9 +306,8 @@ def run_extraction_job(
 
         # lineage from the landed files (self-verifying read-back; the
         # scan is column-pruned to the four counter columns, so it does
-        # not re-read text/spans/html).  The per-bucket rows are tiny,
-        # so they are collected once and re-used for the run totals —
-        # the read-back aggregation runs exactly one Spark job.
+        # not re-read text/spans/html).  The per-bucket rows are tiny:
+        # one Spark job, then a driver-side append.
         t0 = time.perf_counter()
         landed = out_table.read().filter(F.col("bucket").isin(bucket_ids))
         lineage = (
@@ -328,7 +325,6 @@ def run_extraction_job(
                     "bytes_in", "bytes_out", "wall_ms")
         )
         chunk_rows = lineage.collect()
-        this_run_rows.extend(chunk_rows)
         if chunk_rows:
             # tiny table: driver-side pyarrow append, no Spark job
             cat.lineage().append_rows(
@@ -344,37 +340,14 @@ def run_extraction_job(
         n_chunks += 1
 
     wall_s = time.perf_counter() - t_start
-    if done_ids:
-        # resumed run: totals must also cover buckets committed by the
-        # interrupted run, so read the full lineage for this run_id
-        lineage_df = cat.lineage().read().filter(F.col("run_id") == cfg.run_id)
-        totals = lineage_df.agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_ok").alias("n_ok"),
-            F.sum("n_err").alias("n_err"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-        ).collect()[0]
-    else:
-        # fresh run: totals come from the already-collected per-bucket
-        # rows — no extra Spark action in the serial tail
-        from types import SimpleNamespace
-        s = lambda k: sum(getattr(r, k) or 0 for r in this_run_rows) \
-            if this_run_rows else None
-        totals = SimpleNamespace(n_docs=s("n_docs"), n_ok=s("n_ok"),
-                                 n_err=s("n_err"), bytes_in=s("bytes_in"),
-                                 bytes_out=s("bytes_out"))
+    totals = _run_totals(cat, cfg.run_id)
     return {
         "run_id": cfg.run_id,
         "wall_s": wall_s,
         "n_chunks": n_chunks,
         "resumed_buckets_skipped": len(done_ids),
-        "n_docs": totals.n_docs,
-        "n_ok": totals.n_ok,
-        "n_err": totals.n_err,
-        "bytes_in": totals.bytes_in,
-        "bytes_out": totals.bytes_out,
-        "docs_per_s": (totals.n_docs or 0) / wall_s if wall_s else 0.0,
-        "gb_per_s": (totals.bytes_in or 0) / 1e9 / wall_s if wall_s else 0.0,
+        **totals,
+        "docs_per_s": (totals["n_docs"] or 0) / wall_s if wall_s else 0.0,
+        "gb_per_s": (totals["bytes_in"] or 0) / 1e9 / wall_s if wall_s else 0.0,
         "phases": phases,
     }

@@ -114,9 +114,6 @@ def get_spark(app: str = "ocr_spark", cores: int | None = None,
             f"-Xms{heap} {GC_JVM_OPTS}"
             + (f" -XX:ActiveProcessorCount={cores}" if cores else ""))
     builder = builder.config("spark.executor.extraJavaOptions", GC_JVM_OPTS)
-    if os.environ.get("SPARK_GRAFT_LOCAL_DIR"):
-        builder = builder.config("spark.local.dir",
-                                 os.environ["SPARK_GRAFT_LOCAL_DIR"])
     n_shuffle = shuffle_partitions or (cores * 2 if cores else 32)
     builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     for k, v in ENGINE_CONFS.items():

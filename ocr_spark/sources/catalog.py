@@ -4,10 +4,10 @@ The sandbox has no Iceberg runtime jars (SURVEY.md §7.0), so this thin
 layer implements the table properties the north rule actually
 exercises — identity, schema-on-read, bucket partition layout, append,
 dynamic-partition overwrite, and a manifest/snapshot record for
-checkpoint-resume — over plain Parquet paths.  On a real cluster with
-``spark.jars.packages=org.apache.iceberg:...`` the same call sites swap
-to ``spark.read.table`` / ``df.writeTo(...).append()`` via the
-``use_iceberg`` flag; nothing else in the engine changes.
+checkpoint-resume — over plain Parquet paths.  ``Table`` is the swap
+point: on a real cluster with ``spark.jars.packages=org.apache.iceberg:...``
+its method bodies become ``spark.read.table`` / ``df.writeTo(...)``
+calls, and no call site in the engine changes.
 """
 
 from __future__ import annotations
@@ -66,19 +66,15 @@ class Table:
             return self.spark.read.schema(schema).parquet(self.path)
         return self.spark.createDataFrame([], schema)
 
-    def append(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path)
-
     def append_rows(self, rows: list[tuple], schema: T.StructType) -> None:
         """Driver-side append for TINY tables (manifest/lineage: a few
         rows per chunk).  A Spark write job costs 1-3 s of serial tail
         (scheduling + committer temp-dir renames) to land a 1 KB file;
         writing the parquet file directly with pyarrow is milliseconds
         and reads back identically through spark.read.parquet.  Data
-        tables keep the distributed write path."""
+        tables keep the distributed write path.  File names start with
+        the append time, so name order is append order (``read_rows``)."""
+        import time
         import uuid
 
         import pyarrow as pa
@@ -102,9 +98,27 @@ class Table:
             schema=arrow_schema,
         )
         os.makedirs(self.path, exist_ok=True)
-        pq.write_table(
-            table, os.path.join(self.path, f"part-{uuid.uuid4().hex}.parquet")
-        )
+        name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex}.parquet"
+        pq.write_table(table, os.path.join(self.path, name))
+
+    def read_rows(self, schema: T.StructType) -> list[tuple]:
+        """Driver-side read of a TINY table, the mirror of
+        ``append_rows``: every row as a tuple in ``schema`` field order,
+        oldest append first, so a later row for a key supersedes an
+        earlier one.  No Spark job; ``[]`` when the table is absent."""
+        import pyarrow.parquet as pq
+
+        if not os.path.isdir(self.path):
+            return []
+        names = schema.fieldNames()
+        rows: list[tuple] = []
+        for f in sorted(os.listdir(self.path)):
+            # same visibility rule as Spark's scan: _/. files are hidden
+            if not f.endswith(".parquet") or f.startswith(("_", ".")):
+                continue
+            t = pq.read_table(os.path.join(self.path, f), columns=names)
+            rows += zip(*(t.column(n).to_pylist() for n in names))
+        return rows
 
     def overwrite_partitions(self, df: DataFrame,
                              partition_by: tuple[str, ...]) -> None:

@@ -6,6 +6,8 @@ and the checkpoint manifest must make reruns idempotent.
 """
 
 import hashlib
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -160,16 +162,54 @@ def test_resume_after_partial_run(spark, pages_parquet, tmp_path):
     committed = sorted(r.bucket for r in cat.committed_buckets("partial").collect())
     assert committed  # some buckets landed; 4-7 are empty but may commit
     # wipe manifest rows for buckets >= 4 to simulate the kill
-    import shutil, os
-    m = cat.manifest().read().filter("bucket < 4")
-    rows = [(r.run_id, r.bucket, r.committed_at) for r in m.collect()]
+    keep = [b for b in committed if b < 4]
     shutil.rmtree(os.path.join(out, "manifest"))
-    if rows:
-        cat.manifest().append(spark.createDataFrame(
-            rows, "run_id string, bucket int, committed_at timestamp"))
+    cat.commit_buckets("partial", keep)
 
     # resume with the full input: only buckets 4-7 re-extract
     stats = run_extraction_job(spark, pages_parquet, out,
                                JobConfig(run_id="partial", n_buckets=8))
     assert stats["resumed_buckets_skipped"] == 4
     assert _texts(spark, out) == full_texts
+
+
+def test_resume_totals_count_each_bucket_once(spark, pages_parquet, tmp_path):
+    """A crash between a chunk's lineage append and its manifest commit
+    leaves lineage rows for buckets the manifest does not list.  The
+    resume re-extracts those buckets and appends a second lineage row
+    for each; the run totals must still count every bucket once."""
+    out = str(tmp_path / "crash")
+    cfg = JobConfig(run_id="crash", n_buckets=8)
+    run_extraction_job(spark, pages_parquet, out, cfg)
+    cat = Catalog(spark, out)
+    shutil.rmtree(os.path.join(out, "manifest"))
+    cat.commit_buckets("crash", [0, 1, 2, 3])
+
+    stats = run_extraction_job(spark, pages_parquet, out, cfg)
+    assert stats["resumed_buckets_skipped"] == 4
+    lineage_buckets = [r.bucket for r in cat.lineage().read().collect()]
+    assert len(lineage_buckets) > len(set(lineage_buckets))  # stale rows kept
+    want = spark.read.parquet(out + "/pages_extracted").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
+        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("n_err"),
+        F.sum("bytes_in").alias("bytes_in"),
+    ).first().asDict()
+    assert {k: stats[k] for k in want} == want
+
+
+def test_run_totals_take_latest_lineage_row_per_bucket(tmp_path):
+    """Of two lineage rows for one bucket, the totals count the later
+    append; other runs' rows are ignored; no rows gives None totals."""
+    from ocr_spark.plans.pipeline import _run_totals
+    from ocr_spark.sources.catalog import LINEAGE_SCHEMA
+
+    cat = Catalog(None, str(tmp_path))
+    lin = cat.lineage()
+    lin.append_rows([("r", 0, 5, 5, 0, 50, 40, 1),
+                     ("r", 1, 3, 2, 1, 30, 20, 1)], LINEAGE_SCHEMA)
+    lin.append_rows([("r", 0, 4, 3, 1, 45, 35, 1),
+                     ("other", 0, 9, 9, 0, 90, 80, 1)], LINEAGE_SCHEMA)
+    assert _run_totals(cat, "r") == {"n_docs": 7, "n_ok": 5, "n_err": 2,
+                                     "bytes_in": 75, "bytes_out": 55}
+    assert set(_run_totals(cat, "none").values()) == {None}

@@ -60,11 +60,13 @@ def test_extraction_scan_prunes_unused_columns(spark):
 
 def test_pipeline_has_no_per_row_python(spark, pages_parquet):
     from ocr_spark.operators.extract import extract_pages
-    from ocr_spark.plans.pipeline import JobConfig, prepare_pages, with_salt, detect_hot_hosts
+    from ocr_spark.plans.pipeline import JobConfig, prepare_pages, with_salt, probe_skew
 
     pages = prepare_pages(spark.read.parquet(pages_parquet), 16)
     cfg = JobConfig()
-    salted = with_salt(pages, detect_hot_hosts(pages, cfg), cfg)
+    hot_rows, _, _ = probe_skew(pages, cfg)
+    hot = spark.createDataFrame(hot_rows, "host string, est_docs long")
+    salted = with_salt(pages, hot, cfg)
     ext = extract_pages(salted.repartition(8, "bucket", "salt"),
                         passthrough=("url", "bucket"))
     plan = plan_of(ext)

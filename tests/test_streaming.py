@@ -280,3 +280,20 @@ def test_sessionize_idle_timeout_flushes_open_session(spark, tmp_path):
     t0 = 1_700_000_000
     assert {(r["user_id"], r["session_start"], r["session_end"], r["n_events"])
             for r in rows} == {(7, t0, t0 + 60, 2)}
+
+
+def test_stream_query_reuses_one_scratch_tree(spark, tmp_path, monkeypatch):
+    """A driver streaming query called twice in one process leaves one
+    scratch tree (source, sink, checkpoint), not one per call."""
+    import tempfile
+
+    import __spark_entry__ as entry_mod
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = entry_mod.SF0001
+    first = entry_mod.q_stream_sessionize(spark, sf).count()
+    second = entry_mod.q_stream_sessionize(spark, sf).count()
+    assert first == second > 0
+    trees = [d for d in os.listdir(tmp_path)
+             if d.startswith("ocr_spark_stream_sess")]
+    assert len(trees) == 1
